@@ -489,24 +489,13 @@ def _sync_banded_index(
 def _sync_lsh_index(spark, out_table, index_table, k=8, bands=4, shingle_n=2):
     """Turn-granularity LSH index sync: one (key=_conv#turn_, band,
     bucket) row per turn per band (see ``_sync_banded_index``)."""
-    from pyspark.sql import functions as F
-
     from table_ocr_spark.operators.dedup import lsh_banded
 
     def _key(rows):
-        return (
-            rows.withColumn(
-                "_k",
-                F.concat_ws("#", "conv_id", F.col("turn_idx").cast("string")),
-            ),
-            "_k",
-        )
+        return rows.withColumn("_k", _turn_key()), "_k"
 
     def _band(rows):
-        with_k = rows.select(
-            F.concat_ws("#", "conv_id", F.col("turn_idx").cast("string")).alias("_k"),
-            "text",
-        )
+        with_k = rows.select(_turn_key().alias("_k"), "text")
         return lsh_banded(
             with_k, text="text", key="_k", k=k, bands=bands, shingle_n=shingle_n
         )
@@ -537,6 +526,96 @@ def _sync_conv_lsh_index(spark, out_table, index_table, k=8, bands=4, shingle_n=
     _sync_banded_index(
         spark, out_table, index_table, _band, _key, catchup_full_reband=True
     )
+
+
+def _turn_key():
+    """The turn-granularity unit key, ``conv_id#turn_idx``."""
+    from pyspark.sql import functions as F
+
+    return F.concat_ws("#", "conv_id", F.col("turn_idx").cast("string"))
+
+
+def _drop_near_dups_of_history(
+    spark, curated, out_table, index_table, sync, key, key_col, texts,
+    threshold, cap, candidates,
+):
+    """Cross-increment near-dedup against a persisted LSH band index.
+
+    History participates as its (key, band, bucket) index rows — a few
+    bytes per unit per band regardless of text length — so each run
+    shingles and hashes ONLY the increment.  ``sync`` brings
+    ``index_table`` up to the curated table; the increment's bands
+    equi-join the index; old texts are assembled for CANDIDATE keys only
+    (key-pruned semi-join before assembly); exact Jaccard verifies each
+    candidate; and an increment unit near-matching history at ≥
+    ``threshold`` drops — the committed representative wins, rerun-stable
+    by design.
+
+    ``key`` names the index's unit key, ``key_col`` computes it from
+    curated-schema rows, and ``texts(rows) -> (key, text)`` assembles
+    the unit's text from rows carrying ``key`` (a turn's own text, or a
+    whole conversation in turn order)."""
+    from pyspark import StorageLevel
+    from pyspark.sql import functions as F
+
+    from table_ocr_spark.operators.dedup import lsh_pairs_against, verify_pairs_jaccard
+
+    sync(spark, out_table, index_table)
+    if index_table.current_seq() is None:
+        return curated
+    # persist: rows feed the candidate build, the verify text side and
+    # the final anti-join, and the assembled texts feed both banding and
+    # verify — uncached, the extract→score→dedup chain (and a per-conv
+    # collect) would execute once per branch
+    rows = curated.withColumn(key, key_col).persist(StorageLevel.MEMORY_AND_DISK)
+    new = texts(rows).persist(StorageLevel.MEMORY_AND_DISK)
+    cand = lsh_pairs_against(
+        new,
+        index_table.read(spark),
+        text="text",
+        key=key,
+        max_bucket_size=cap,
+        max_candidates_per_bucket=candidates,
+    )
+    old = texts(
+        out_table.read(spark)
+        .withColumn(key, key_col)
+        .join(cand.select(F.col("key_old").alias(key)).distinct(), key, "left_semi")
+    )
+    # the verify text frame holds BOTH sides, and a re-ingested key can
+    # exist on both (the exact anti-join passes it when its text was
+    # rewritten) — an unprefixed union would fan the verify join out to
+    # new-vs-new (jaccard 1.0, spurious self-drop).  Side prefixes make
+    # every key unique: each candidate verifies NEW text against OLD
+    # text, so a rewritten re-ingest drops only if it genuinely
+    # near-matches its history version.
+    pairs = verify_pairs_jaccard(
+        cand.select(
+            F.concat(F.lit("n#"), "key_new").alias("key_a"),
+            F.concat(F.lit("o#"), "key_old").alias("key_b"),
+        ),
+        new.select(F.concat(F.lit("n#"), key).alias(key), "text").unionByName(
+            old.select(F.concat(F.lit("o#"), key).alias(key), "text")
+        ),
+        text="text",
+        key=key,
+        threshold=threshold,
+    )
+    drop = pairs.select(F.expr("substring(key_a, 3)").alias(key)).distinct()
+    return rows.join(drop, key, "left_anti").select(*curated.columns)
+
+
+def _finish(spark, output: str, summary: dict) -> int:
+    """Write the run's ``_curation_summary.json`` sidecar — every run,
+    no-op and aborted ones included, so a monitoring reader always finds
+    the latest run's summary there — echo it as the last stdout line,
+    and stop the session."""
+    os.makedirs(output, exist_ok=True)
+    with open(os.path.join(output, "_curation_summary.json"), "w") as f:
+        json.dump(summary, f, indent=1, default=str)
+    print(json.dumps(summary, default=str))
+    spark.stop()
+    return 0
 
 
 def main(argv=None) -> int:
@@ -676,6 +755,7 @@ def main(argv=None) -> int:
     from jobs.extract import _resolve_config
     from table_ocr_spark.session import build_session
     from table_ocr_spark.sources.catalog import TRANSCRIPT_SCHEMA
+    from table_ocr_spark.sources.snapshots import SnapshotTable
 
     cfg = _resolve_config(args.config, None)
     langs = [x for x in args.langs.split(",") if x]
@@ -688,8 +768,6 @@ def main(argv=None) -> int:
     in_seq = None
     out_table = None
     if args.input_snapshot:
-        from table_ocr_spark.sources.snapshots import SnapshotTable
-
         in_table = SnapshotTable(args.input)
         in_seq = in_table.current_seq()
         if in_seq is None:
@@ -708,24 +786,14 @@ def main(argv=None) -> int:
                     after_seq = int(h["summary"]["input_seq_processed"])
                     break
             if after_seq >= in_seq:
-                summary = {
+                return _finish(spark, args.output, {
                     "input": args.input,
                     "output": args.output,
                     "input_seq_processed": after_seq,
                     "rows_in": 0,
                     "rows_out": 0,
                     "no_new_input": True,
-                }
-                # same sidecar contract as a real run — a monitoring
-                # reader always finds the latest run's summary here
-                os.makedirs(args.output, exist_ok=True)
-                with open(
-                    os.path.join(args.output, "_curation_summary.json"), "w"
-                ) as f:
-                    json.dump(summary, f, indent=1, default=str)
-                print(json.dumps(summary, default=str))
-                spark.stop()
-                return 0
+                })
             src = in_table.read_changes(spark, after_seq=after_seq, until_seq=in_seq)
         else:
             src = in_table.read(spark, seq=in_seq)
@@ -764,72 +832,25 @@ def main(argv=None) -> int:
         corpus_strip_min_df=args.strip_corpus_min_df or None,
     )
     if out_table is not None and args.conv_near_dedup:
-        # cross-increment CONVERSATION near-dedup via a persisted
-        # conv-granularity LSH band index (conv_lsh_index sidecar):
-        # history participates as one (conv_id, band, bucket) row per
-        # conv per band — a few bytes regardless of conversation
-        # length — so each run re-assembles and hashes ONLY the
-        # increment's conversations.  Candidates equi-join the index;
-        # old conv texts are re-assembled for CANDIDATE convs only
-        # (key-pruned semi-join); side-prefixed keys make a re-ingested
-        # conv id verify new-vs-old text, never new-vs-new (the same
-        # self-pair hazard as the turn-level block above).  An increment
-        # conv near-matching history drops whole — the committed
-        # representative wins, rerun-stable.
-        from pyspark import StorageLevel
+        # cross-increment CONVERSATION near-dedup via the conv-granularity
+        # index (conv_lsh_index sidecar): old convs are re-assembled for
+        # candidates only, and an increment conv near-matching history
+        # drops whole
         from table_ocr_spark.operators.conv_scope import conv_text
-        from table_ocr_spark.operators.dedup import (
-            lsh_pairs_against,
-            verify_pairs_jaccard,
-        )
-        from table_ocr_spark.sources.snapshots import SnapshotTable
 
-        conv_idx_table = SnapshotTable(os.path.join(args.output, "conv_lsh_index"))
-        _sync_conv_lsh_index(spark, out_table, conv_idx_table)
-        if conv_idx_table.current_seq() is not None:
-            # referenced by the conv re-assembly AND the final anti-join —
-            # uncached, the whole upstream chain executes twice
-            curated = curated.persist(StorageLevel.MEMORY_AND_DISK)
-            # conv_new is itself referenced twice (LSH banding + the
-            # verify text side) — persist, or the collect-per-conv
-            # aggregation runs twice even over the cached curated frame
-            conv_new = conv_text(
-                curated.select("conv_id", "turn_idx", "text")
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            cand = lsh_pairs_against(
-                conv_new,
-                conv_idx_table.read(spark),
-                text="text",
-                key="conv_id",
-                max_bucket_size=args.near_dedup_cap,
-                max_candidates_per_bucket=args.near_dedup_candidates,
-            )
-            old_rows = out_table.read(spark).join(
-                cand.select(F.col("key_old").alias("conv_id")).distinct(),
-                "conv_id",
-                "left_semi",
-            )
-            conv_old = conv_text(old_rows.select("conv_id", "turn_idx", "text"))
-            pairs = verify_pairs_jaccard(
-                cand.select(
-                    F.concat(F.lit("n#"), "key_new").alias("key_a"),
-                    F.concat(F.lit("o#"), "key_old").alias("key_b"),
-                ),
-                conv_new.select(
-                    F.concat(F.lit("n#"), "conv_id").alias("conv_id"), "text"
-                ).unionByName(
-                    conv_old.select(
-                        F.concat(F.lit("o#"), "conv_id").alias("conv_id"), "text"
-                    )
-                ),
-                text="text",
-                key="conv_id",
-                threshold=args.conv_near_dedup,
-            )
-            drop = pairs.select(
-                F.expr("substring(key_a, 3)").alias("conv_id")
-            ).distinct()
-            curated = curated.join(drop, "conv_id", "left_anti")
+        curated = _drop_near_dups_of_history(
+            spark,
+            curated,
+            out_table,
+            SnapshotTable(os.path.join(args.output, "conv_lsh_index")),
+            _sync_conv_lsh_index,
+            "conv_id",
+            F.col("conv_id"),
+            lambda rows: conv_text(rows.select("conv_id", "turn_idx", "text")),
+            args.conv_near_dedup,
+            args.near_dedup_cap,
+            args.near_dedup_candidates,
+        )
 
     if out_table is not None and out_table.current_seq() is not None:
         # cross-increment exact dedup: a new row whose content already
@@ -842,77 +863,19 @@ def main(argv=None) -> int:
         curated = curated.join(prev_fp, "fingerprint", "left_anti")
 
     if out_table is not None and args.near_dedup:
-        # cross-increment NEAR-dedup via the persisted LSH band index:
-        # history participates as (key, band, bucket) rows — a few bytes
-        # per doc per band — so each run shingles/hashes ONLY the
-        # increment, equi-joins its bands against the index, verifies
-        # exact Jaccard on candidates (old texts fetched key-pruned from
-        # the curated table), and drops new rows near-matching history
-        # (the existing representative wins — rerun-stable by design).
-        from pyspark import StorageLevel
-        from table_ocr_spark.operators.dedup import (
-            lsh_pairs_against,
-            verify_pairs_jaccard,
+        curated = _drop_near_dups_of_history(
+            spark,
+            curated,
+            out_table,
+            SnapshotTable(os.path.join(args.output, "lsh_index")),
+            _sync_lsh_index,
+            "_k",
+            _turn_key(),
+            lambda rows: rows.select("_k", "text"),
+            args.near_dedup,
+            args.near_dedup_cap,
+            args.near_dedup_candidates,
         )
-        from table_ocr_spark.sources.snapshots import SnapshotTable
-
-        idx_table = SnapshotTable(os.path.join(args.output, "lsh_index"))
-        _sync_lsh_index(spark, out_table, idx_table)
-        if idx_table.current_seq() is not None:
-            with_k = curated.withColumn(
-                "_k", F.concat_ws("#", "conv_id", F.col("turn_idx").cast("string"))
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            # persist: referenced by the candidate build, the verify text
-            # join, and the final anti-join — uncached, the whole
-            # extract→score→dedup chain would execute three times
-            cand = lsh_pairs_against(
-                with_k,
-                idx_table.read(spark),
-                text="text",
-                key="_k",
-                max_bucket_size=args.near_dedup_cap,
-                max_candidates_per_bucket=args.near_dedup_candidates,
-            )
-            # the verify text frame holds BOTH sides, and a re-ingested
-            # (conv, turn) key can exist on both (the exact anti-join
-            # passes it when its text was rewritten) — an unprefixed
-            # union would fan the verify join out to new-vs-new (jaccard
-            # 1.0, spurious self-drop).  Side prefixes make every key
-            # unique: each candidate verifies NEW text against OLD text,
-            # so a rewritten re-ingest is dropped only if it genuinely
-            # near-matches its history version.
-            old_texts = (
-                out_table.read(spark)
-                .select(
-                    F.concat_ws(
-                        "#", "conv_id", F.col("turn_idx").cast("string")
-                    ).alias("_k0"),
-                    "text",
-                )
-                .join(
-                    cand.select(F.col("key_old").alias("_k0")).distinct(),
-                    "_k0",
-                    "left_semi",
-                )
-                .select(F.concat(F.lit("o#"), "_k0").alias("_k"), "text")
-            )
-            new_texts = with_k.select(
-                F.concat(F.lit("n#"), "_k").alias("_k"), "text"
-            )
-            pairs = verify_pairs_jaccard(
-                cand.select(
-                    F.concat(F.lit("n#"), "key_new").alias("key_a"),
-                    F.concat(F.lit("o#"), "key_old").alias("key_b"),
-                ),
-                new_texts.unionByName(old_texts),
-                text="text",
-                key="_k",
-                threshold=args.near_dedup,
-            )
-            drop = pairs.select(
-                F.expr("substring(key_a, 3)").alias("_k")
-            ).distinct()
-            curated = with_k.join(drop, "_k", "left_anti").drop("_k")
 
     # stage metrics ride the single write pass via observe — no extra scan
     obs = Observation("curation")
@@ -981,8 +944,6 @@ def main(argv=None) -> int:
         # column; split-selective readers rely on parquet row-group stats
         # (an extra clustering shuffle to regain file-level pruning is a
         # cost the atomicity does not require).
-        from table_ocr_spark.sources.snapshots import SnapshotTable
-
         table = out_table or SnapshotTable(os.path.join(args.output, "table"))
         if args.incremental:
             # incremental runs commit only the new increment's rows —
@@ -1027,22 +988,14 @@ def main(argv=None) -> int:
                     validate_fn=_guard_concurrent_increment,
                 )
             except _ConcurrentIncrement as e:
-                summary = {
+                return _finish(spark, args.output, {
                     "input": args.input,
                     "output": args.output,
                     "input_seq_processed": in_seq,
                     "rows_out": 0,
                     "increment_already_committed": True,
                     "detail": str(e),
-                }
-                os.makedirs(args.output, exist_ok=True)
-                with open(
-                    os.path.join(args.output, "_curation_summary.json"), "w"
-                ) as f:
-                    json.dump(summary, f, indent=1, default=str)
-                print(json.dumps(summary, default=str))
-                spark.stop()
-                return 0
+                })
         else:
             # a full (non-incremental) run recomputes the WHOLE corpus:
             # commit via overwrite so rerunning the identical command is
@@ -1081,11 +1034,7 @@ def main(argv=None) -> int:
         )
         summary = _metrics()
     summary["wall_ms"] = int((time.time() - t0) * 1000)
-    with open(os.path.join(args.output, "_curation_summary.json"), "w") as f:
-        json.dump(summary, f, indent=1, default=str)
-    print(json.dumps(summary, default=str))
-    spark.stop()
-    return 0
+    return _finish(spark, args.output, summary)
 
 
 if __name__ == "__main__":

@@ -30,6 +30,12 @@ but cannot bound the O(n²) PAIR COUNT of a hot bucket — that is what
 ``max_bucket_size`` + the ``lsh_oversized_buckets`` quarantine view are
 for.  ``near_dup_components`` then folds candidate pairs into dup
 families (pointer-jumped connected components, O(log diameter) rounds).
+
+Every banded path — MinHash all-pairs, star and against-index, SimHash,
+and the sign-LSH embedding forms in operators/similarity.py — runs on one
+banded-bucket layer: ``_band_rows`` (explode per-band buckets),
+``_copartition`` (the explicit-width (band, bucket) exchange and the
+bucket-size cap), ``_bucket_self_join`` and ``_bucket_join_against``.
 """
 
 from __future__ import annotations
@@ -260,10 +266,108 @@ def minhash_signatures(
     )
 
 
+# ------------------------------------------------ banded-bucket joins -----
+def _band_rows(df: DataFrame, buckets: list, payload: tuple = ()) -> DataFrame:
+    """(k, *payload, band, bucket) — one row per ``df`` row per band, band
+    b keyed by the expression ``buckets[b]`` over ``df``'s columns."""
+    bb = [F.struct(F.lit(b).alias("band"), c.alias("bucket")) for b, c in enumerate(buckets)]
+    return df.select("k", *payload, F.explode(F.array(*bb)).alias("bb")).select(
+        "k", *payload, "bb.band", "bb.bucket"
+    )
+
+
+def _copartition(banded: DataFrame, max_bucket_size: int | None = None) -> DataFrame:
+    """Banded rows hash-partitioned by (band, bucket) at the explicit
+    ``spark.sql.shuffle.partitions`` width, minus every bucket holding
+    more than ``max_bucket_size`` rows.
+
+    The width is explicit because AQE coalesces shuffle reads by BYTES,
+    and banded rows are tiny (key + two small columns) while the bucket
+    join emits O(bucket²) pairs — AQE was observed to fold the entire
+    pairing onto 3 tasks (22 s CPU on 3.6 MB → zero scaling past ~4
+    cores).  A repartition with an EXPLICIT count is exempt from AQE
+    coalescing, keeps both sides of a self-join on one reused exchange
+    (the signature / sketch subtree computes once), and inherits cluster
+    sizing from spark.sql.shuffle.partitions.
+
+    The cap is a WINDOW count on that exchange: a pathological bucket's
+    rows move once and drop before any pairing, where a count aggregate
+    + broadcast anti-join would recompute the whole banded subtree (a
+    broadcast side never reuses the repartition exchange)."""
+    n_part = int(banded.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    banded = banded.repartition(n_part, "band", "bucket")
+    if max_bucket_size is None:
+        return banded
+    size = F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
+    return (
+        banded.withColumn("_bsz", size)
+        .filter(F.col("_bsz") <= max_bucket_size)
+        .drop("_bsz")
+    )
+
+
+def _bucket_self_join(
+    banded: DataFrame, *cols: Column, max_bucket_size: int | None = None
+) -> DataFrame:
+    """(key_a, key_b, *cols) for every pair of rows sharing a (band,
+    bucket), key_a < key_b — NOT distinct: a pair colliding in several
+    bands repeats.  ``cols`` read the two sides as ``a.<col>`` /
+    ``b.<col>`` (each caller's verify measure)."""
+    banded = _copartition(banded, max_bucket_size)
+    # shuffle_hash hint: at small data AQE turns the self-join into a
+    # broadcast join, and the broadcast side recomputes the banded
+    # subtree instead of reusing the exchange — the hint keeps both
+    # sides on the ONE repartition (plan-guarded: a single signature
+    # pass).  At scale the banded frame exceeds any broadcast threshold
+    # and this is the join AQE would pick anyway.
+    a, b = banded.alias("a"), banded.hint("shuffle_hash").alias("b")
+    return (
+        a.join(b, ["band", "bucket"])
+        .filter(F.col("a.k") < F.col("b.k"))
+        .select(F.col("a.k").alias("key_a"), F.col("b.k").alias("key_b"), *cols)
+    )
+
+
+def _bucket_join_against(
+    new_banded: DataFrame,
+    index: DataFrame,
+    key: str,
+    max_bucket_size: int | None = None,
+    max_candidates_per_bucket: int | None = None,
+) -> DataFrame:
+    """(key_new, key_old) distinct: every increment row × ``index`` row
+    ((key, band, bucket) rows) sharing a (band, bucket).
+
+    ``max_bucket_size`` is sided: each side drops only its OWN oversized
+    buckets, which is pair-equivalent to dropping from both — a pair
+    needs a row from each side, so zeroing either side zeroes the
+    bucket's pairs.  ``max_candidates_per_bucket`` then truncates the
+    index side of each bucket to its C lowest keys (deterministic window
+    rank on the same exchange): a bucket pairs n_new × C rows instead of
+    n_new × n_old."""
+    new = _copartition(new_banded, max_bucket_size)
+    old = _copartition(
+        index.select(F.col(key).alias("k"), "band", "bucket"), max_bucket_size
+    )
+    if max_candidates_per_bucket is not None:
+        rank = F.row_number().over(Window.partitionBy("band", "bucket").orderBy("k"))
+        old = (
+            old.withColumn("_rn", rank)
+            .filter(F.col("_rn") <= max_candidates_per_bucket)
+            .drop("_rn")
+        )
+    return (
+        new.alias("a")
+        .join(old.alias("b"), ["band", "bucket"])
+        .select(F.col("a.k").alias("key_new"), F.col("b.k").alias("key_old"))
+        .distinct()
+    )
+
+
 def _lsh_banded(
     df: DataFrame, text: str, key: str, k: int, bands: int, shingle_n: int
 ) -> DataFrame:
-    """(key, band, bucket) rows — one per doc × band.
+    """(k, band, bucket) rows — one per doc × band.
 
     Built on ``minhash_signatures``: the signature aggregation's own
     hash(k) exchange is the reuse point — both sides of the downstream
@@ -271,28 +375,15 @@ def _lsh_banded(
     computes the signatures ONCE (observed 35 s → ~2 s at sf0.01 when
     this reuse was first introduced; the banding below is a plain
     projection that AQE keeps above the reused exchange)."""
-    rows_per_band = k // bands
+    r = k // bands
     sig = minhash_signatures(df, text, key, k, shingle_n)
-    return sig.select(
-        "k",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ":",
-                            *[
-                                F.col(f"m{b * rows_per_band + r}").cast("string")
-                                for r in range(rows_per_band)
-                            ],
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("k", "bb.band", "bb.bucket")
+    return _band_rows(
+        sig,
+        [
+            F.concat_ws(":", *[F.col(f"m{b * r + i}").cast("string") for i in range(r)])
+            for b in range(bands)
+        ],
+    )
 
 
 def minhash_lsh_pairs(
@@ -306,8 +397,8 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Candidate near-dup pairs: equal MinHash band in ≥1 of ``bands`` bands.
 
-    signature[k] → bands of k/bands values → explode → groupBy band bucket →
-    self-join inside buckets (key_a < key_b), distinct pairs.
+    signature[k] → bands of k/bands values → explode → self-join inside
+    (band, bucket) buckets (key_a < key_b), distinct pairs.
 
     ``max_bucket_size`` bounds the within-bucket self-join: a bucket of n
     docs emits O(n²) pairs, and at 100 TB near-identical boilerplate makes
@@ -316,54 +407,9 @@ def minhash_lsh_pairs(
     still pairs through its other bands unless those are oversized too);
     ``lsh_oversized_buckets`` returns the dropped buckets for a quarantine
     sink so the drop is observable, not silent.
-
-    The cap is a map-side-combined ``groupBy(band, bucket).count()`` whose
-    oversized survivors broadcast back as a left_anti join — NOT a
-    count-window over (band, bucket): the window would co-locate each
-    bucket in one task, making the pathological bucket the cap exists for
-    into a shuffle straggler (its rows all move before being dropped).
-    Oversized buckets are few by construction (each holds > cap rows, so
-    at most total/cap exist) — safely broadcastable.
     """
     banded = _lsh_banded(df, text, key, k, bands, shingle_n)
-    # Explicit-width co-partitioning for the pair stage.  AQE coalesces
-    # shuffle reads by BYTES, and banded rows are tiny (key + 2 small
-    # cols) while the within-bucket join emits O(bucket²) pairs — bytes
-    # wildly underestimate compute density, and AQE was observed to fold
-    # the entire pairing onto 3 tasks (22 s CPU on 3.6 MB → zero scaling
-    # past ~4 cores).  repartition with an EXPLICIT count is exempt from
-    # AQE coalescing, keeps both join sides on one reused exchange, and
-    # inherits cluster sizing from spark.sql.shuffle.partitions.
-    n_part = int(banded.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    banded = banded.repartition(n_part, "band", "bucket")
-    if max_bucket_size is not None:
-        # cap via a WINDOW count on the exchange already there — the
-        # former count-aggregate + broadcast anti-join recomputed the
-        # whole shingle→signature subtree (a broadcast side never reuses
-        # the repartition exchange).  The window co-locates each bucket
-        # in one task, which is exactly what the repartition above does
-        # anyway; the pathological bucket's rows move once and are
-        # dropped before any pairing.
-        banded = (
-            banded.withColumn(
-                "_bsz", F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
-            )
-            .filter(F.col("_bsz") <= max_bucket_size)
-            .drop("_bsz")
-        )
-    # shuffle_hash hint: at small data AQE turns the self-join into a
-    # broadcast join, and the broadcast side recomputes the signature
-    # subtree instead of reusing the exchange — the hint keeps both
-    # sides on the ONE repartition (plan-guarded: a single signature
-    # pass).  At scale the banded frame exceeds any broadcast threshold
-    # and this is the join AQE would pick anyway.
-    a = banded.alias("a")
-    b = banded.hint("shuffle_hash").alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.k") < F.col("b.k")))
-        .select(F.col("a.k").alias("key_a"), F.col("b.k").alias("key_b"))
-        .distinct()
-    )
+    return _bucket_self_join(banded, max_bucket_size=max_bucket_size).distinct()
 
 
 def minhash_lsh_star_pairs(
@@ -407,17 +453,7 @@ def minhash_lsh_star_pairs(
     column contract identical to ``minhash_lsh_pairs``, so verify/CC/
     representative stages and any ordering-sensitive oracle compose
     unchanged)."""
-    banded = _lsh_banded(df, text, key, k, bands, shingle_n)
-    if max_bucket_size is not None:
-        oversized = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("_bsz"))
-            .filter(F.col("_bsz") > max_bucket_size)
-            .select("band", "bucket")
-        )
-        banded = banded.join(F.broadcast(oversized), ["band", "bucket"], "left_anti")
-    n_part = int(banded.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    banded = banded.repartition(n_part, "band", "bucket")
+    banded = _copartition(_lsh_banded(df, text, key, k, bands, shingle_n), max_bucket_size)
     # pivot = bucket min (or salted argmin) via a WINDOW over the same
     # (band, bucket) partitioning — NOT an aggregate + join-back: the
     # tiny pivot frame gets broadcast by AQE, and a broadcast side never
@@ -492,45 +528,10 @@ def lsh_pairs_against(
     ``max_bucket_size`` caps the per-bucket pair blowup exactly like the
     self-join form, but sided: a bucket is dropped when EITHER side holds
     more than the cap (the pair count is n_new × n_old, so either side
-    being pathological is enough; both count aggregates are map-side
-    combined and the few oversized buckets broadcast as anti-joins).
-
-    Scale shape: both sides repartition by (band, bucket) at the explicit
-    shuffle width — the same AQE-coalescing exemption as
-    ``minhash_lsh_pairs`` (bytes wildly underestimate the pair stage's
-    compute density; see that docstring)."""
-    n_part = int(new_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    new_banded = _lsh_banded(new_df, text, key, k, bands, shingle_n).repartition(
-        n_part, "band", "bucket"
-    )
-    old_banded = index.select(F.col(key).alias("k"), "band", "bucket").repartition(
-        n_part, "band", "bucket"
-    )
-    if max_bucket_size is not None:
-        # sided cap as WINDOW counts on the exchanges already there (the
-        # former per-side broadcast anti-joins re-derived each side's
-        # subtree — incl. the increment's signature computation).  Each
-        # side drops only its OWN oversized buckets, which is
-        # pair-equivalent to dropping from both: a pair needs a row from
-        # each side, so zeroing either side zeroes the bucket's pairs.
-        w = Window.partitionBy("band", "bucket")
-        new_banded = new_banded.withColumn("_bn", F.count(F.lit(1)).over(w))
-        old_banded = old_banded.withColumn("_bo", F.count(F.lit(1)).over(w))
-        new_banded = new_banded.filter(F.col("_bn") <= max_bucket_size).drop("_bn")
-        old_banded = old_banded.filter(F.col("_bo") <= max_bucket_size).drop("_bo")
-    if max_candidates_per_bucket is not None:
-        w = Window.partitionBy("band", "bucket").orderBy("k")
-        old_banded = (
-            old_banded.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= max_candidates_per_bucket)
-            .drop("_rn")
-        )
-    a = new_banded.alias("a")
-    b = old_banded.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bucket") == F.col("b.bucket")))
-        .select(F.col("a.k").alias("key_new"), F.col("b.k").alias("key_old"))
-        .distinct()
+    being pathological is enough)."""
+    new_banded = _lsh_banded(new_df, text, key, k, bands, shingle_n)
+    return _bucket_join_against(
+        new_banded, index, key, max_bucket_size, max_candidates_per_bucket
     )
 
 
@@ -605,51 +606,16 @@ def simhash_near_dup_pairs(
     if max_hamming >= bands:
         raise ValueError("pigeonhole requires max_hamming < bands")
     bpb = bits // bands
-    mask = (1 << bpb) - 1
+    mask = F.lit((1 << bpb) - 1).cast("long")
     sim = df.select(F.col(key).alias("k"), simhash_col(text, bits).alias("sh"))
-    banded = sim.select(
-        "k",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("sh"), b * bpb)
-                        .bitwiseAND(F.lit(mask).cast("long"))
-                        .alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("k", "sh", "bb.band", "bb.bucket")
-    # explicit-width co-partitioning on the JOIN keys: one exchange both
-    # self-join sides reuse (the simhash projection computes once), the
-    # join needs no further shuffle, and — because the width is
-    # user-specified — AQE cannot byte-coalesce the O(bucket²) pair
-    # stage onto a handful of tasks (see minhash_lsh_pairs above).
-    banded = banded.repartition(
-        int(banded.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-        "band",
-        "bucket",
+    banded = _band_rows(
+        sim,
+        [F.shiftright(F.col("sh"), b * bpb).bitwiseAND(mask) for b in range(bands)],
+        payload=("sh",),
     )
-    # shuffle_hash: keep small inputs off the broadcast path, which would
-    # recompute the simhash projection instead of reusing the exchange
-    a, b = banded.alias("a"), banded.hint("shuffle_hash").alias("b")
     ham = hamming_col(F.col("a.sh"), F.col("b.sh"), bits)
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.k") < F.col("b.k")),
-        )
-        .select(
-            F.col("a.k").alias("key_a"),
-            F.col("b.k").alias("key_b"),
-            ham.alias("hamming"),
-        )
+        _bucket_self_join(banded, ham.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )

@@ -14,7 +14,11 @@ Embedding-cosine near-dup detection: ``embedding_near_dup_pairs`` pairs
 consecutive ids (the cheap deterministic candidate generator used by one
 correctness oracle); ``embedding_near_dup_lsh`` is the open-world scale
 path — banded sign-LSH candidates + exact cosine verify, itself exactly
-oracled by inlining the md5-derived hyperplanes into SQL.
+oracled by inlining the md5-derived hyperplanes into SQL.  It, the
+persistable ``embedding_lsh_index`` and the incremental
+``embedding_pairs_against`` band and join through operators/dedup.py's
+banded-bucket layer (``_band_rows`` / ``_bucket_self_join`` /
+``_bucket_join_against``), shared with every MinHash and SimHash path.
 """
 
 from __future__ import annotations
@@ -23,6 +27,12 @@ from typing import List, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from table_ocr_spark.operators.dedup import (
+    _band_rows,
+    _bucket_join_against,
+    _bucket_self_join,
+)
 
 
 def dot_col(a: Column, b: Column) -> Column:
@@ -302,6 +312,23 @@ def ivf_topk_indexed(
     return cosine_topk(cand, query, k=k, vec=vec, key=key, keep=("_list",))
 
 
+def _sign_bands(
+    df: DataFrame,
+    dim: int,
+    vec: str,
+    key: str,
+    planes_per_band: int,
+    bands: int,
+    payload: tuple = (),
+) -> DataFrame:
+    """(k, *payload, band, bucket) with v = the vector: band b is the
+    ``planes_per_band``-bit sign bucket over its own hyperplane family."""
+    kv = df.select(F.col(key).alias("k"), F.col(vec).alias("v"))
+    v = F.col("v")
+    buckets = [lsh_bucket_col(v, dim, planes_per_band, b * planes_per_band) for b in range(bands)]
+    return _band_rows(kv, buckets, payload)
+
+
 def embedding_near_dup_lsh(
     df: DataFrame,
     dim: int,
@@ -319,64 +346,16 @@ def embedding_near_dup_lsh(
     matches exactly — the MinHash-banding shape on the random-hyperplane
     sketch.  Expected candidates for unrelated vectors shrink by
     ~2^-planes_per_band per band, so the exact cosine runs on a tiny set
-    instead of the O(n²) cross join.  The explicit-width repartition on
-    the join keys makes ReuseExchange compute the bucket projection once
-    for both self-join sides AND pins the pair stage's task count
-    against AQE byte-coalescing.  Output: (key_a, key_b, cos_sim
-    rounded to 4dp) with
-    cos_sim ≥ threshold (compared on the ROUNDED value, so the decision
-    is engine-portable)."""
-    sig = df.select(
-        F.col(key).alias("k"),
-        F.col(vec).alias("v"),
-        *[
-            lsh_bucket_col(F.col(vec), dim, planes_per_band, b * planes_per_band).alias(
-                f"bkt{b}"
-            )
-            for b in range(bands)
-        ],
-    )
-    banded = sig.select(
-        "k",
-        "v",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), F.col(f"bkt{b}").alias("bucket"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("k", "v", "bb.band", "bb.bucket")
-    # explicit-width co-partitioning on the JOIN keys: the hyperplane
-    # projection computes once under a single reused exchange, and the
-    # user-specified width keeps AQE from byte-coalescing the
-    # O(bucket²) pair stage onto a few tasks (the banded rows are tiny
-    # in bytes but explode quadratically in compute — see
-    # dedup.minhash_lsh_pairs / BENCH/MINHASH_SCALING.md).
-    banded = banded.repartition(
-        int(banded.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-        "band",
-        "bucket",
-    )
-    # shuffle_hash: keep small inputs off the broadcast path, which would
-    # recompute the hyperplane projection instead of reusing the exchange
-    a, b = banded.alias("a"), banded.hint("shuffle_hash").alias("b")
+    instead of the O(n²) cross join.  The bucket self-join computes the
+    hyperplane projection once for both sides.  Output: (key_a, key_b,
+    cos_sim rounded to 4dp) with cos_sim ≥ threshold (compared on the
+    ROUNDED value, so the decision is engine-portable)."""
+    banded = _sign_bands(df, dim, vec, key, planes_per_band, bands, payload=("v",))
     cos = cosine_col(
         F.col("a.v").cast("array<double>"), F.col("b.v").cast("array<double>")
     )
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.k") < F.col("b.k")),
-        )
-        .select(
-            F.col("a.k").alias("key_a"),
-            F.col("b.k").alias("key_b"),
-            F.round(cos, 4).alias("cos_sim"),
-        )
+        _bucket_self_join(banded, F.round(cos, 4).alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
         .distinct()
     )
@@ -397,26 +376,9 @@ def embedding_lsh_index(
     candidates against the WHOLE history with one (band, bucket)
     equi-join instead of re-projecting every stored vector
     (``embedding_pairs_against``)."""
-    sig = df.select(
-        F.col(key),
-        *[
-            lsh_bucket_col(F.col(vec), dim, planes_per_band, b * planes_per_band).alias(
-                f"bkt{b}"
-            )
-            for b in range(bands)
-        ],
+    return _sign_bands(df, dim, vec, key, planes_per_band, bands).select(
+        F.col("k").alias(key), "band", "bucket"
     )
-    return sig.select(
-        key,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), F.col(f"bkt{b}").alias("bucket"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(key, "bb.band", "bb.bucket")
 
 
 def embedding_pairs_against(
@@ -443,23 +405,11 @@ def embedding_pairs_against(
     window rank), bounding hot-bucket blowup exactly like the MinHash
     form.  Output: (key_new, key_old, cos_sim) with rounded cos_sim ≥
     ``threshold``."""
-    from pyspark.sql.window import Window
-
-    new_banded = embedding_lsh_index(new_df, dim, vec, key, planes_per_band, bands)
-    old_banded = index.select(F.col(key).alias("_ko"), "band", "bucket")
-    if max_candidates_per_bucket is not None:
-        w = Window.partitionBy("band", "bucket").orderBy("_ko")
-        old_banded = (
-            old_banded.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= max_candidates_per_bucket)
-            .drop("_rn")
-        )
-    n_part = int(new_banded.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    cand = (
-        new_banded.repartition(n_part, "band", "bucket")
-        .join(old_banded.repartition(n_part, "band", "bucket"), ["band", "bucket"])
-        .select(F.col(key).alias("key_new"), F.col("_ko").alias("key_old"))
-        .distinct()
+    cand = _bucket_join_against(
+        _sign_bands(new_df, dim, vec, key, planes_per_band, bands),
+        index,
+        key,
+        max_candidates_per_bucket=max_candidates_per_bucket,
     )
     nv = new_df.select(F.col(key).alias("key_new"), F.col(vec).alias("_vn"))
     ov = old_vecs.select(F.col(key).alias("key_old"), F.col(vec).alias("_vo"))

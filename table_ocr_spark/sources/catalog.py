@@ -119,11 +119,6 @@ def write_transcripts_jsonl(pdf, path: str, n_files: int = 4) -> None:
         )
 
 
-def load_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Driver-provided TPC-H-ish tables (TESTDATA.md)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 class ExtractionTable:
     """Output table handle: data + lineage manifest + run-config sidecar."""
 

@@ -161,7 +161,11 @@ def test_lsh_short_docs_no_false_buckets(spark):
 def test_lsh_hot_bucket_cap_bounds_pairs(spark, docs_df):
     """A pathological all-identical corpus stays bounded under the cap and
     the dropped buckets are observable via the quarantine view."""
-    from table_ocr_spark.operators.dedup import lsh_oversized_buckets, minhash_lsh_pairs
+    from table_ocr_spark.operators.dedup import (
+        lsh_oversized_buckets,
+        minhash_lsh_pairs,
+        minhash_lsh_star_pairs,
+    )
 
     clones = spark.range(40).select(
         (F.col("id") + 1000).alias("doc_id"),
@@ -176,6 +180,22 @@ def test_lsh_hot_bucket_cap_bounds_pairs(spark, docs_df):
     assert n_capped < uncapped and n_capped == 3  # (0,1), (0,3), (1,3)
     over = lsh_oversized_buckets(corpus, max_bucket_size=10).collect()
     assert len(over) == 4 and all(r.bucket_size == 40 for r in over)
+
+    # the star form under a cap (the call curate makes): a 60-clone
+    # bucket over cap 50 emits no clone edge, every other edge survives
+    clones60 = spark.range(60).select(
+        (F.col("id") + 2000).alias("doc_id"),
+        F.lit("the same boilerplate page appears everywhere").alias("text"),
+    )
+    corpus60 = docs_df.unionByName(clones60)
+
+    def star(**kw):
+        return {(r.key_a, r.key_b) for r in minhash_lsh_star_pairs(corpus60, **kw).collect()}
+
+    uncapped_star = star()
+    organic = {(a, b) for a, b in uncapped_star if b < 1000}
+    assert organic and len(uncapped_star - organic) == 59  # pivot 2000 + 59 clones
+    assert star(max_bucket_size=50) == organic
 
 
 def test_simhash_banded_join_complete_vs_brute_force(spark):
