@@ -42,6 +42,16 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def _id_frame(spark, name: str, values: list):
+    """A driver-held id list as a one-column DataFrame, built from a pandas
+    frame: it crosses to the JVM as Arrow and plans as a LocalTableScan.
+    (A Python list plans as ``Scan ExistingRDD``, which boots a Python
+    worker every time the frame is used.)"""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame({name: values}), f"{name} string")
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description="remove conversations from a curated table")
     ap.add_argument("--table", required=True, help="curation output root (holds table/ and lsh_index/)")
@@ -108,7 +118,7 @@ def main(argv=None) -> int:
 
     summary = {"table": args.table, "conv_ids": len(ids), "rows_deleted": len(keys)}
     if keys:
-        src = spark.createDataFrame([(c,) for c in ids], "conv_id string")
+        src = _id_frame(spark, "conv_id", ids)
         seq = data.merge(
             spark, src, ["conv_id"], when_matched="delete",
             summary={"forget_conv_ids": len(ids), **resume},
@@ -136,7 +146,7 @@ def main(argv=None) -> int:
 
         idx = SnapshotTable(os.path.join(args.table, "lsh_index"))
         if idx.current_seq() is not None:
-            ksrc = spark.createDataFrame([(k,) for k in keys], "_k string")
+            ksrc = _id_frame(spark, "_k", keys)
             # data_seq: after the scrub the index covers the data table
             # exactly at the merge seq — without recording that, the next
             # curate run's sync would see a non-append commit and rebuild
@@ -151,9 +161,8 @@ def main(argv=None) -> int:
         # forgotten convs' derived bands the same way
         cidx = SnapshotTable(os.path.join(args.table, "conv_lsh_index"))
         if cidx.current_seq() is not None:
-            csrc = spark.createDataFrame([(c,) for c in ids], "conv_id string")
             summary["conv_index_seq"] = cidx.merge(
-                spark, csrc, ["conv_id"], when_matched="delete",
+                spark, src, ["conv_id"], when_matched="delete",
                 summary={"forget_conv_ids": len(ids), "data_seq": seq,
                          **_carried_algo_tag(cidx)},
             )

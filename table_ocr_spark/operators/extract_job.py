@@ -14,9 +14,10 @@ eliminates).
 
 Scale notes (100 TB / 10^12 turns):
 * extraction itself never shuffles; the only exchanges in the full job are
-  the explicit load-balancing repartition (``skew.salted_repartition``,
-  straggler conversations only) and the composite-key turn_seq ordering
-  join (plans/pipeline.py) — lineage metrics ride the write via observe();
+  the explicit load-balancing repartition on (bucket, salt)
+  (``plans/pipeline._salted_bucketed``; only straggler conversations get a
+  nonzero salt) and the composite-key turn_seq ordering join
+  (plans/pipeline.py) — lineage metrics ride the write via observe();
 * column pruning: only (conv_id, turn_idx, text) feed the UDF — Catalyst
   prunes role/tool/ts at the parquet scan when callers don't select them;
 * output is cell-span-heavy but bounded: per-row output size is O(len(text)).

@@ -17,25 +17,45 @@ The skew sketch is a cheap ``groupBy(conv_id).count()`` — at scale, a
 partial-aggregated two-stage count over just the conv_id column (pruned
 scan), then only conv_ids above threshold are collected: that set is tiny
 (heavy hitters by definition) and is broadcast back as a join or literal
-filter.
+filter.  A job that commits in groups sketches once per run, not once per
+group: ``heavy_conv_ids_by_group`` counts per (group, conv_id) with each
+group's total in the same aggregate.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from table_ocr_spark.config import DEFAULT_CONFIG, ExtractorConfig
 
 
-def _heavy_counts(df: DataFrame, threshold: int) -> DataFrame:
+# largest heavy-hitter set inlined as a literal IN-list; past it callers
+# fall back to a broadcast join against the sketch
+HEAVY_INLINE_CAP = 10_000
+
+
+def _heavy_counts(df: DataFrame, threshold: int, group: Column | None = None) -> DataFrame:
     """The ONE heavy-hitter sketch definition — (conv_id, n_turns) with
-    n_turns > threshold — shared by the broadcast-join and materialized
-    paths so the two can never drift apart on what 'heavy' means."""
+    n_turns > threshold — shared by the broadcast-join, materialized and
+    run-level paths so they can never drift apart on what 'heavy' means.
+
+    Grouped form (``group``: a column naming each row's group, e.g. the
+    commit group of its bucket): the same count per (``_group``, conv_id),
+    computed as a rollup so each group's row total rides the same
+    aggregate as a ``_is_total`` row (conv_id NULL, the grand total
+    dropped) — one scan gives both the heavy candidates and the totals
+    their budget-relative thresholds need."""
+    n_turns = F.count(F.lit(1)).alias("n_turns")
+    if group is None:
+        return df.groupBy("conv_id").agg(n_turns).filter(F.col("n_turns") > threshold)
+    gid = F.col("_gid")
     return (
-        df.groupBy("conv_id")
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .filter(F.col("n_turns") > threshold)
+        df.withColumn("_group", group)
+        .rollup("_group", "conv_id")
+        .agg(n_turns, F.grouping_id().alias("_gid"))
+        .filter((gid == 1) | ((gid == 0) & (F.col("n_turns") > threshold)))
+        .select("_group", "conv_id", "n_turns", (gid == 1).alias("_is_total"))
     )
 
 
@@ -76,7 +96,7 @@ def effective_skew_threshold(
 
 
 def heavy_conv_ids_materialized(
-    df: DataFrame, threshold: int, cap: int = 10_000, with_counts: bool = False
+    df: DataFrame, threshold: int, cap: int = HEAVY_INLINE_CAP, with_counts: bool = False
 ) -> list | None:
     """Collect the heavy-hitter conv_id set to the driver ONCE.
 
@@ -99,6 +119,57 @@ def heavy_conv_ids_materialized(
     if with_counts:
         return [(r.conv_id, r.n_turns) for r in rows]
     return [r.conv_id for r in rows]
+
+
+def heavy_conv_ids_by_group(
+    df: DataFrame,
+    group: Column,
+    groups: list,
+    cfg: ExtractorConfig,
+    num_partitions: int | None,
+    cap: int | None = None,
+) -> dict:
+    """Run-level skew sketch: ``{g: (threshold, heavy conv_ids | None)}``
+    for every ``g`` in ``groups`` from ONE aggregate over ``df``.
+
+    Equal, group by group, to ``heavy_conv_ids_materialized(df_g,
+    effective_skew_threshold(df_g, cfg, num_partitions), cap)`` over
+    ``df_g = df.filter(group == g)`` — the per-group form costs two sketch
+    jobs and a rescan per group.  Here the grouped ``_heavy_counts`` keeps
+    every conversation above the static floor plus each group's total; the
+    driver derives each group's budget-relative threshold from its total
+    and keeps the conversations above it.  ``None`` means over ``cap``:
+    the caller falls back to the broadcast join.
+
+    The collect is bounded by ``len(groups) * (cap + 2)`` rows: totals
+    first, then candidates by count, descending.  When it is truncated, a
+    group whose threshold lies below the smallest collected count may be
+    missing candidates; unless it is already over the cap, that group
+    alone is re-sketched with the per-group form (adversarial corpora
+    only).
+    """
+    cap = HEAVY_INLINE_CAP if cap is None else cap
+    limit = len(groups) * (cap + 2)
+    rows = (
+        _heavy_counts(df, cfg.skew_turns_threshold, group)
+        .orderBy(F.col("_is_total").desc(), F.col("n_turns").desc())
+        .limit(limit + 1)
+        .collect()
+    )
+    truncated = len(rows) > limit
+    totals = {r._group: r.n_turns for r in rows if r._is_total}
+    candidates = [r for r in rows if not r._is_total]
+    complete_above = candidates[-1].n_turns if truncated else 0
+    out = {}
+    for g in groups:
+        thr = effective_skew_threshold(df, cfg, num_partitions, total=totals.get(g, 0))
+        heavy = [r.conv_id for r in candidates if r._group == g and r.n_turns > thr]
+        if len(heavy) > cap:
+            heavy = None
+        elif thr < complete_above:
+            heavy = heavy_conv_ids_materialized(df.filter(group == g), thr, cap)
+        out[g] = (thr, heavy)
+    return out
 
 
 def salted_repartition(

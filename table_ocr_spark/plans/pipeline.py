@@ -1,6 +1,10 @@
 """The end-to-end extraction job plan (SURVEY.md §3.4 lifecycle):
 
     read transcripts
+      → ONE skew sketch over the pending buckets [per run, not per group:
+                                                  group totals + heavy convs,
+                                                  skew.heavy_conv_ids_by_group]
+    per commit group:
       → bucket(N, conv_id)                       [partition spec]
       → salted repartition on (bucket, salt)     [axis B: skew-free balance]
       → extraction pandas UDF                    [one ArrowEvalPython stage]
@@ -9,15 +13,19 @@
                                                   whole-conv re-gather]
       → observe() per-bucket metrics             [one pass, no read-back]
       → write data/config=<hash>/bucket=<k>, dynamic overwrite  [idempotent]
-      → lineage rows per bucket                  [checkpoint-resume watermark]
+      → lineage rows per bucket                  [checkpoint-resume watermark:
+                                                  one parquet file written by
+                                                  the driver, no Spark job]
 
 Commit granularity is a *bucket group* (``commit_groups`` groups of
 ``n_buckets / commit_groups`` buckets each): each group is one Spark job
 committed atomically — output partitions via dynamic partition overwrite
 (re-running a group rewrites exactly its bucket dirs, never duplicating),
-lineage appended after the data lands.  A killed run resumes by reading the
-lineage manifest and skipping committed buckets (the anti-join/filter
-described in SURVEY.md §4.1 caching row).
+lineage appended after the data lands as one file that appears atomically
+(temp file + ``os.replace``, ``ExtractionTable.append_lineage``).  A killed
+run resumes by reading the lineage manifest on the driver and skipping
+committed buckets (the anti-join/filter described in SURVEY.md §4.1
+caching row).
 
 This emulates Iceberg snapshot-per-commit semantics over parquet
 (SURVEY.md §7 hard-point 3); on a real cluster the write becomes
@@ -40,11 +48,7 @@ from pyspark.sql.window import Window as WindowSpec
 
 from table_ocr_spark.config import DEFAULT_CONFIG, ExtractorConfig
 from table_ocr_spark.operators.extract_job import bucket_expr, with_extraction
-from table_ocr_spark.operators.skew import (
-    effective_skew_threshold,
-    heavy_conv_ids_materialized,
-    skewed_conv_ids,
-)
+from table_ocr_spark.operators.skew import heavy_conv_ids_by_group, skewed_conv_ids
 from table_ocr_spark.sources.catalog import ExtractionTable
 
 
@@ -62,29 +66,33 @@ class RunResult:
     wall_ms: int = 0
 
 
-def _salted_bucketed(df: DataFrame, cfg: ExtractorConfig, n_buckets: int) -> DataFrame:
+def _salted_bucketed(
+    df: DataFrame,
+    cfg: ExtractorConfig,
+    n_buckets: int,
+    heavy: Optional[list],
+    threshold: int,
+) -> DataFrame:
     """bucket + salt + repartition + stable in-partition order.
 
     The salt spreads only heavy conversations (per-turn extraction is
     embarrassingly parallel, so this is semantics-free); normal convs keep
-    salt=0 and stay co-located within their bucket.
+    salt=0 and stay co-located within their bucket.  ``heavy`` is the
+    group's heavy-hitter list from the run-level sketch
+    (``skew.heavy_conv_ids_by_group``); ``None`` means it was over the
+    inline cap, and the heavy set is re-derived here as a broadcast join
+    at the sketch's ``threshold``.
     """
-    parts = cfg.target_partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    thr = effective_skew_threshold(df, cfg, parts)
     salt = F.pmod(F.col("turn_idx"), F.lit(cfg.salt_buckets))
     out = df.withColumn("bucket", bucket_expr(n_buckets))
-    heavy_list = heavy_conv_ids_materialized(df, thr)
-    if heavy_list is not None:
-        # heavy set inlined as a literal predicate: sketch runs once per
-        # job, not per downstream action; no broadcast build side
-        is_heavy = F.col("conv_id").isin(heavy_list) if heavy_list else F.lit(False)
+    if heavy is not None:
+        # heavy set inlined as a literal predicate: no broadcast build side
+        is_heavy = F.col("conv_id").isin(heavy) if heavy else F.lit(False)
         out = out.withColumn("_salt", F.when(is_heavy, salt).otherwise(F.lit(0)))
     else:  # adversarial fallback: too many heavy convs to inline
-        heavy = skewed_conv_ids(df, thr).withColumn("_is_heavy", F.lit(True))
+        heavy_df = skewed_conv_ids(df, threshold).withColumn("_is_heavy", F.lit(True))
         out = (
-            out.join(F.broadcast(heavy), "conv_id", "left")
+            out.join(F.broadcast(heavy_df), "conv_id", "left")
             .withColumn(
                 "_salt",
                 F.when(F.col("_is_heavy").isNotNull(), salt).otherwise(F.lit(0)),
@@ -152,15 +160,28 @@ def run_extract(
         "conv_id", "turn_idx", "text"
     )
 
-    groups_done = 0
+    todo_by_group = {}
     for g in range(commit_groups):
-        group_buckets = [b for b in range(n_buckets) if b % commit_groups == g]
-        todo = [b for b in group_buckets if b not in committed]
-        if not todo:
-            continue
+        todo = [b for b in range(n_buckets) if b % commit_groups == g and b not in committed]
+        if todo:
+            todo_by_group[g] = todo
+    if todo_by_group:
+        # ONE skew sketch per run, over the not-yet-committed buckets: each
+        # group's threshold and heavy set are derived from it on the driver
+        # (a per-group sketch would rescan the input twice per group)
+        parts = cfg.target_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+        bucket = bucket_expr(n_buckets)
+        pending = src.filter(bucket.isin(sorted(b for t in todo_by_group.values() for b in t)))
+        skew = heavy_conv_ids_by_group(
+            pending, F.pmod(bucket, F.lit(commit_groups)), list(todo_by_group), cfg, parts
+        )
+
+    groups_done = 0
+    for g, todo in todo_by_group.items():
         gt0 = time.time()
         keys = src.filter(bucket_expr(n_buckets).isin(todo))
-        sub = _salted_bucketed(keys, cfg, n_buckets)
+        thr, heavy = skew[g]
+        sub = _salted_bucketed(keys, cfg, n_buckets, heavy, thr)
         ex = with_extraction(sub.select("conv_id", "turn_idx", "text", "bucket"), cfg)
         # with_extraction projects the fixed output schema; re-attach bucket
         ex = ex.withColumn("bucket", bucket_expr(n_buckets))

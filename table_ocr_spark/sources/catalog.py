@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,6 +59,23 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("wall_ms", T.LongType()),
     ]
 )
+
+
+def _lineage_arrow_schema(nullable: bool = False):
+    """``LINEAGE_SCHEMA`` as an Arrow schema — the driver-side lineage
+    writer's file schema (``nullable=True``: every column nullable, the
+    form Spark's parquet writer stores)."""
+    import pyarrow as pa
+
+    types = {
+        T.StringType(): pa.string(),
+        T.IntegerType(): pa.int32(),
+        T.LongType(): pa.int64(),
+        T.DoubleType(): pa.float64(),
+    }
+    return pa.schema(
+        [pa.field(f.name, types[f.dataType], nullable or f.nullable) for f in LINEAGE_SCHEMA.fields]
+    )
 
 
 def write_transcripts_parquet(pdf, path: str, n_files: int = 8) -> None:
@@ -141,24 +159,46 @@ class ExtractionTable:
             df = df.filter(F.col("config") == config_hash)
         return df
 
+    def _lineage_files(self) -> list:
+        """Committed lineage files.  In-flight commits are hidden temp
+        files (leading ``.``, no ``.parquet`` suffix) that no reader lists."""
+        try:
+            names = os.listdir(self.lineage_dir)
+        except FileNotFoundError:
+            return []
+        return sorted(
+            os.path.join(self.lineage_dir, f)
+            for f in names
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        )
+
     def read_lineage(self, spark: SparkSession) -> Optional[DataFrame]:
-        if not os.path.isdir(self.lineage_dir) or not any(
-            f.endswith(".parquet") for f in os.listdir(self.lineage_dir)
-        ):
+        if not self._lineage_files():
             return None
         return spark.read.schema(LINEAGE_SCHEMA).parquet(self.lineage_dir)
 
+    def _read_lineage_arrow(self, files: list, columns: Optional[list] = None):
+        import pyarrow.dataset as ds
+
+        # files written by Spark store every column as nullable; the
+        # driver-written ones keep LINEAGE_SCHEMA's nullability — read both
+        # under the nullable form
+        schema = _lineage_arrow_schema(nullable=True)
+        return ds.dataset(files, schema=schema, format="parquet").to_table(columns=columns)
+
     def committed_buckets(self, spark: SparkSession, config_hash: str) -> set:
-        lin = self.read_lineage(spark)
-        if lin is None:
+        """Buckets committed under ``config_hash``.  Read on the driver with
+        pyarrow: the sidecar is a handful of tiny files, so a resume starts
+        without a Spark job.  (``spark`` is unused, kept for the API.)"""
+        files = self._lineage_files()
+        if not files:
             return set()
-        rows = (
-            lin.filter((F.col("config_hash") == config_hash) & (F.col("status") == "committed"))
-            .select("bucket")
-            .distinct()
-            .collect()
-        )
-        return {r.bucket for r in rows}
+        t = self._read_lineage_arrow(files, ["config_hash", "status", "bucket"])
+        return {
+            b
+            for c, s, b in zip(*(t.column(n).to_pylist() for n in t.column_names))
+            if c == config_hash and s == "committed"
+        }
 
     # one small parquet file lands per commit; past this many the dir is
     # folded into one file so lineage never becomes an unbounded
@@ -166,53 +206,73 @@ class ExtractionTable:
     # bucket-lineage analog)
     LINEAGE_COMPACT_THRESHOLD = 64
 
+    def _commit_lineage_file(self, table, name: str) -> None:
+        """Write ``table`` to ``_lineage/<name>`` atomically: a hidden temp
+        file first, then ``os.replace`` — readers see the whole file or
+        nothing (the table's single-writer, local-FS contract)."""
+        import pyarrow.parquet as pq
+
+        os.makedirs(self.lineage_dir, exist_ok=True)
+        tmp = os.path.join(self.lineage_dir, f".{uuid.uuid4().hex}.tmp")
+        try:
+            pq.write_table(table, tmp)
+            os.replace(tmp, os.path.join(self.lineage_dir, name))
+        except BaseException:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
+
     def append_lineage(self, spark: SparkSession, rows: list) -> None:
-        df = spark.createDataFrame(rows, LINEAGE_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self.lineage_dir)
+        """Commit lineage ``rows`` (tuples in ``LINEAGE_SCHEMA`` order, or
+        dicts keyed by its field names) as one parquet file written from the
+        driver — no Spark job, so no Python worker boots for a few rows.
+        (``spark`` is unused, kept for the API.)"""
+        import pyarrow as pa
+
+        names = LINEAGE_SCHEMA.fieldNames()
+        cols = {n: [] for n in names}
+        for r in rows:
+            if isinstance(r, dict):
+                unknown = set(r) - set(names)
+                if unknown:
+                    raise ValueError(f"unknown lineage fields {sorted(unknown)}")
+                values = [r.get(n) for n in names]
+            else:
+                values = list(r)
+                if len(values) != len(names):
+                    raise ValueError(
+                        f"lineage row has {len(values)} values, expected {len(names)}"
+                    )
+            for n, v in zip(names, values):
+                cols[n].append(v)
+        for f in LINEAGE_SCHEMA.fields:
+            if not f.nullable and any(v is None for v in cols[f.name]):
+                raise ValueError(f"lineage field {f.name!r} is not nullable")
+        table = pa.Table.from_pydict(cols, schema=_lineage_arrow_schema())
+        self._commit_lineage_file(table, f"part-{uuid.uuid4().hex}.parquet")
         self._maybe_compact_lineage(spark)
 
     def _maybe_compact_lineage(self, spark: SparkSession, max_files: int | None = None) -> None:
         """Fold the lineage dir into one parquet file once it exceeds
-        ``max_files`` small files.  Crash-safe under the table's
-        single-writer contract: the compacted file is MOVED in before
-        the old files are removed, so a crash in between leaves exact
-        duplicate rows — removed by the ``distinct()`` here on the next
-        compaction, and harmless to ``committed_buckets`` (a distinct
-        set) in the meantime."""
-        import shutil
-        import uuid
-
+        ``max_files`` small files, on the driver with pyarrow.  Crash-safe
+        under the table's single-writer contract: the compacted file is
+        MOVED in before the old files are removed, so a crash in between
+        leaves exact duplicate rows — removed by the distinct here on the
+        next compaction, and harmless to ``committed_buckets`` (a distinct
+        set) in the meantime.  (``spark`` is unused, kept for the API.)"""
         limit = max_files or self.LINEAGE_COMPACT_THRESHOLD
-        try:
-            files = sorted(
-                f for f in os.listdir(self.lineage_dir) if f.endswith(".parquet")
-            )
-        except FileNotFoundError:
+        old_paths = self._lineage_files()
+        if len(old_paths) <= limit:
             return
-        if len(files) <= limit:
-            return
-        old_paths = [os.path.join(self.lineage_dir, f) for f in files]
-        tmp = self.lineage_dir + ".compact"
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            spark.read.schema(LINEAGE_SCHEMA)
-            .parquet(*old_paths)
-            .distinct()
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(tmp)
+        names = LINEAGE_SCHEMA.fieldNames()
+        rows = self._read_lineage_arrow(old_paths)
+        distinct = rows.group_by(names).aggregate([]).select(names)
+        self._commit_lineage_file(
+            distinct.cast(_lineage_arrow_schema()),
+            f"compacted-{uuid.uuid4().hex}.parquet",
         )
-        for f in os.listdir(tmp):
-            if f.endswith(".parquet"):
-                shutil.move(
-                    os.path.join(tmp, f),
-                    os.path.join(
-                        self.lineage_dir, f"compacted-{uuid.uuid4().hex}.parquet"
-                    ),
-                )
         for p in old_paths:
             os.remove(p)
-        shutil.rmtree(tmp, ignore_errors=True)
 
     def write_config(self, cfg_json: str, config_hash: str) -> None:
         os.makedirs(self.config_dir, exist_ok=True)

@@ -85,6 +85,52 @@ def test_skew_sketch_broadcast_fallback(spark, src):
     assert heavy_conv_ids_materialized(sel, threshold=10**9) == []
 
 
+@pytest.mark.parametrize("cap", [None, 3, 1])
+def test_run_level_sketch_equals_per_group_sketches(spark, tmp_path_factory, cap):
+    """The run-level skew sketch (one aggregate) gives every commit group
+    the threshold and heavy set the per-group sketch would: the same
+    budget-relative threshold from the group's own total, the same heavy
+    conversations, and the same over-cap verdict.  Small caps truncate the
+    bounded collect, which exercises the per-group re-sketch path."""
+    from table_ocr_spark.config import ExtractorConfig
+    from table_ocr_spark.operators.extract_job import bucket_expr
+    from table_ocr_spark.operators.skew import (
+        HEAVY_INLINE_CAP,
+        effective_skew_threshold,
+        heavy_conv_ids_by_group,
+        heavy_conv_ids_materialized,
+    )
+
+    p = str(tmp_path_factory.mktemp("sketch_in"))
+    write_transcripts_parquet(synth.gen_pandas(30, seed=42, max_long=200), p)
+    src = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(p).select("conv_id", "turn_idx", "text")
+    cfg = ExtractorConfig(skew_turns_threshold=5)
+    n_buckets, n_groups, parts = 8, 4, 4
+    todo = {g: [b for b in range(n_buckets) if b % n_groups == g] for g in range(n_groups)}
+    todo[1] = [1]  # a partly committed group: only bucket 1 pending
+    del todo[2]  # a fully committed group
+    pending = src.filter(bucket_expr(n_buckets).isin([b for t in todo.values() for b in t]))
+    got = heavy_conv_ids_by_group(
+        pending, F.pmod(bucket_expr(n_buckets), F.lit(n_groups)), list(todo), cfg, parts, cap
+    )
+    assert sorted(got) == sorted(todo)
+    above_floor = 0
+    for g, buckets in todo.items():
+        keys = src.filter(bucket_expr(n_buckets).isin(buckets))
+        want_thr = effective_skew_threshold(keys, cfg, parts)
+        want = heavy_conv_ids_materialized(
+            keys, want_thr, cap=HEAVY_INLINE_CAP if cap is None else cap
+        )
+        thr, heavy = got[g]
+        assert thr == want_thr, g
+        assert (heavy is None) == (want is None), (g, heavy, want)
+        if want is not None:
+            assert sorted(heavy) == sorted(want), g
+        above_floor += thr > cfg.skew_turns_threshold
+    # the corpus makes the budget-relative threshold matter
+    assert above_floor >= 1
+
+
 def test_exact_dedup_partial_aggregation(spark, src):
     """The fingerprint groupBy must plan a two-phase (partial → final)
     aggregate — map-side combine is what keeps the shuffle small at scale."""
@@ -159,12 +205,14 @@ def test_pipeline_write_plan_shape(spark, src):
 
     from table_ocr_spark.config import DEFAULT_CONFIG
     from table_ocr_spark.operators.extract_job import bucket_expr, with_extraction
+    from table_ocr_spark.operators.skew import heavy_conv_ids_by_group
     from table_ocr_spark.plans.pipeline import _salted_bucketed
 
     keys = src.select("conv_id", "turn_idx", "text").filter(
         bucket_expr(8).isin([0, 2, 4, 6])
     )
-    sub = _salted_bucketed(keys, DEFAULT_CONFIG, 8)
+    thr, heavy = heavy_conv_ids_by_group(keys, F.lit(0), [0], DEFAULT_CONFIG, 8)[0]
+    sub = _salted_bucketed(keys, DEFAULT_CONFIG, 8, heavy, thr)
     ex = with_extraction(sub.select("conv_id", "turn_idx", "text", "bucket"), DEFAULT_CONFIG)
     ex = ex.withColumn("bucket", bucket_expr(8))
     seq = keys.select("conv_id", "turn_idx").withColumn(

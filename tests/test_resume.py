@@ -158,10 +158,121 @@ def test_lineage_compaction_bounds_files_and_preserves_rows(spark, tmp_path):
     for run in range(n_commits):
         t.append_lineage(spark, [{
             "run_id": f"r{run}", "config_hash": "c", "bucket": run % 8,
-            "status": "committed", "rows": 10, "convs": 2,
-            "boilerplate_ratio": 0.1, "cell_count": 3, "wall_ms": 5,
+            "status": "committed", "turns": 10 + run,
+            "boilerplate_ratio_avg": 0.1, "cell_count": 3, "wall_ms": 5,
         }])
     files = [f for f in os.listdir(t.lineage_dir) if f.endswith(".parquet")]
     assert len(files) <= t.LINEAGE_COMPACT_THRESHOLD
     assert t.read_lineage(spark).count() == n_commits
+    assert t.read_lineage(spark).agg(F.sum("turns")).first()[0] == sum(
+        10 + run for run in range(n_commits)
+    )
     assert t.committed_buckets(spark, "c") == set(range(8))
+
+
+def test_append_lineage_rejects_unknown_and_missing_fields(spark, tmp_path):
+    """A row keyed by names outside LINEAGE_SCHEMA is an error, not a
+    silently NULL column; so is a NULL in a non-nullable field."""
+    t = ExtractionTable(str(tmp_path / "tbl"))
+    row = {"run_id": "r", "config_hash": "c", "bucket": 0, "status": "committed",
+           "turns": 1, "boilerplate_ratio_avg": 0.0, "cell_count": 0, "wall_ms": 1}
+    with pytest.raises(ValueError, match="rows"):
+        t.append_lineage(spark, [{**row, "rows": 10}])
+    with pytest.raises(ValueError, match="bucket"):
+        t.append_lineage(spark, [{k: v for k, v in row.items() if k != "bucket"}])
+    assert t.committed_buckets(spark, "c") == set()
+    t.append_lineage(spark, [row])
+    assert t.committed_buckets(spark, "c") == {0}
+
+
+def test_lineage_commit_is_atomic(spark, tmp_path, monkeypatch):
+    """A failure between writing the lineage temp file and renaming it
+    into place commits nothing: committed_buckets is unchanged and no
+    partial .parquet file is visible to any reader."""
+    import os
+
+    from table_ocr_spark.sources import catalog
+
+    t = ExtractionTable(str(tmp_path / "tbl"))
+    row = ("r1", "c", 0, "committed", 5, 0.0, 0, 1)
+    t.append_lineage(spark, [row])
+    before = sorted(os.listdir(t.lineage_dir))
+
+    def crash(src, dst):
+        raise OSError("killed before rename")
+
+    monkeypatch.setattr(catalog.os, "replace", crash)
+    with pytest.raises(OSError, match="before rename"):
+        t.append_lineage(spark, [("r2", "c", 1, "committed", 5, 0.0, 0, 1)])
+    monkeypatch.undo()
+
+    assert sorted(os.listdir(t.lineage_dir)) == before
+    assert t.committed_buckets(spark, "c") == {0}
+    assert t.read_lineage(spark).count() == 1
+
+
+def test_lineage_reads_spark_and_driver_written_files(spark, tmp_path):
+    """A lineage dir written partly by the old Spark writer (nullable
+    columns, _SUCCESS and .crc side files) and partly by the driver-side
+    writer reads back in full through every reader."""
+    import pyarrow.parquet as pq
+
+    from table_ocr_spark.sources.catalog import LINEAGE_SCHEMA
+
+    t = ExtractionTable(str(tmp_path / "tbl"))
+    (
+        spark.createDataFrame([("old", "c", 0, "committed", 7, 0.5, 2, 10)], LINEAGE_SCHEMA)
+        .coalesce(1).write.mode("append").parquet(t.lineage_dir)
+    )
+    t.append_lineage(spark, [("new", "c", 1, "committed", 11, 0.25, 3, 20),
+                             ("new", "c", 2, "committed", 13, None, None, 20)])
+    t.append_lineage(spark, [("other", "d", 3, "committed", 17, 0.0, 0, 5)])
+
+    lin = t.read_lineage(spark)
+    assert lin.count() == 4
+    assert lin.agg(F.sum("turns")).first()[0] == 7 + 11 + 13 + 17
+    assert t.committed_buckets(spark, "c") == {0, 1, 2}
+    assert t.committed_buckets(spark, "d") == {3}
+    arrow = pq.read_table(t.lineage_dir)
+    assert arrow.num_rows == 4
+    assert sorted(arrow.column("bucket").to_pylist()) == [0, 1, 2, 3]
+    assert sum(arrow.column("turns").to_pylist()) == 7 + 11 + 13 + 17
+
+    # compaction folds both kinds into one file and keeps every row
+    t._maybe_compact_lineage(spark, max_files=1)
+    assert len(t._lineage_files()) == 1
+    assert t.read_lineage(spark).count() == 4
+    assert t.committed_buckets(spark, "c") == {0, 1, 2}
+
+
+def test_over_cap_heavy_set_falls_back_to_broadcast_join(spark, input_path, tmp_path, monkeypatch):
+    """When a group's heavy set is over the inline cap, the run salts via
+    the broadcast-join fallback at the sketch's threshold and the output
+    is still exactly-once."""
+    from table_ocr_spark.config import ExtractorConfig
+    from table_ocr_spark.operators import skew
+    from table_ocr_spark.plans import pipeline
+
+    calls = []
+    real = pipeline.skewed_conv_ids
+
+    def spy(df, threshold):
+        calls.append(threshold)
+        return real(df, threshold)
+
+    monkeypatch.setattr(skew, "HEAVY_INLINE_CAP", 0)
+    monkeypatch.setattr(pipeline, "skewed_conv_ids", spy)
+    cfg = ExtractorConfig(skew_turns_threshold=5)
+    out = str(tmp_path / "extracted_cap")
+    res = run_extract(spark, input_path, out, cfg=cfg, n_buckets=N_BUCKETS,
+                      commit_groups=GROUPS, run_id="cap")
+    assert sorted(res.committed_buckets) == list(range(N_BUCKETS))
+    assert calls and all(thr >= cfg.skew_turns_threshold for thr in calls)
+
+    table = ExtractionTable(out)
+    data = table.read(spark, cfg.config_hash())
+    n_in = spark.read.parquet(input_path).count()
+    assert data.count() == n_in
+    assert data.groupBy("conv_id", "turn_idx").count().filter("count > 1").count() == 0
+    lin = table.read_lineage(spark)
+    assert lin.agg(F.sum("turns")).first()[0] == n_in
